@@ -1,6 +1,7 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
 
 /** Session + catalog glue — the Spark-native analog of the reference
   * engine core (see `/root/reference/csvb_engine/src/lib.rs:13-31`:
@@ -17,8 +18,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Core {
 
-  /** Build the standard session. `cpus` mirrors the harness contract
-    * (`local[$SPARK_GRAFT_CPUS]`, shuffle.partitions = cpus).
+  /** Build the standard session — the program's one session builder
+    * (the CLI, Verify, Bench, Explain and the test suite all call it).
+    * `cpus` mirrors the harness contract (`local[$SPARK_GRAFT_CPUS]`,
+    * shuffle.partitions = cpus); code downstream sizes its parallelism
+    * from the built session, never from the environment.
     */
   def session(appName: String = "graft", cpus: Int = defaultCpus): SparkSession = {
     val spark = SparkSession
@@ -36,6 +40,7 @@ object Core {
     spark
   }
 
+  /** The program's only read of `SPARK_GRAFT_CPUS`. */
   def defaultCpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
 
   /** Register N CSV files/dirs as ONE named table — the reference's
@@ -413,7 +418,7 @@ object Core {
       try spark.table(t.name).schema.fields.zipWithIndex.toSeq.map { case (f, i) =>
         Row("spark_catalog", schema, t.name, f.name, (i + 1).toLong,
           f.dataType.catalogString, if (f.nullable) "YES" else "NO")
-      } catch { case _: Throwable => Seq.empty[Row] } // unresolvable view: skip, don't fail
+      } catch { case NonFatal(_) => Seq.empty[Row] } // unresolvable view: skip, don't fail
     }
     def save(rows: Seq[Row], schema: StructType, name: String): Unit = {
       // a previous PROCESS' managed-table files can survive in the

@@ -1,6 +1,7 @@
 package graft.engine
 
 import scala.collection.mutable
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.types._
@@ -111,7 +112,7 @@ private[engine] final class PgCatalog(session: SparkSession) {
     if (sql.contains("pg_class") && sql.contains("c.oid") && sql.contains("relname OPERATOR")) {
       val pat = NamePattern.findFirstMatchIn(sql).map(_.group(1).replace("''", "'"))
       val rows = pat.toSeq.flatMap { p =>
-        val rx = try p.r catch { case _: Throwable => java.util.regex.Pattern.quote(p).r }
+        val rx = try p.r catch { case NonFatal(_) => java.util.regex.Pattern.quote(p).r }
         relations().collect {
           case (name, _) if rx.pattern.matcher(name).find() =>
             Row(Integer.valueOf(oidOf(name)), "public", name)

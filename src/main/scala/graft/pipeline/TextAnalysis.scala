@@ -928,11 +928,11 @@ object TextAnalysis {
     */
   final case class BpeRoundStat(taken: Int, skipped: Int, window: Int)
 
-  /** [[bpeMergesBatched]] plus per-round accounting — the probe/spec
+  /** [[bpeMergesBatched]] plus per-round accounting — the spec
     * surface for the round-count law (rounds = ⌈nMerges / batch⌉ as
     * long as each round's 8×-oversized candidate window survives its
-    * conflicts, which [[graft.BpeProbe]] measures at the ≥256-merge /
-    * ≥32-batch regime the operator exists for).
+    * conflicts, which LawsSpec pins at the 256-merge / 32-batch
+    * regime the operator exists for).
     */
   def bpeMergesBatchedStats(docs: DataFrame, nMerges: Int = 12, batch: Int = 4):
       (Seq[(String, String)], Seq[BpeRoundStat]) = {

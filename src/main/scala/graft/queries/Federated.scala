@@ -102,6 +102,34 @@ object Federated {
       .orderBy(col("s_nationkey"))
   }
 
+  /** Client-task budget for a query that federates against this
+    * JVM's own [[graft.engine.PgWire]] servers: half the running
+    * session's scheduler width, `defaultParallelism / 2`.
+    *
+    * Server and client share one SparkContext. Every wire read or
+    * COPY write is a client task holding a slot while it waits on the
+    * server, and the server answers with Spark jobs of its own (its
+    * scans, and the `insertInto` that commits a COPY). Were the client
+    * tasks to hold every slot, those jobs would never be scheduled and
+    * the clients would sit in `PgClient`'s read timeout; keeping them
+    * at or below half the width leaves the server the other half. The
+    * width is read from the session, never from the environment: a
+    * `local[4]` session started under `SPARK_GRAFT_CPUS=32` still has
+    * only 4 slots.
+    *
+    * A remote Postgres has its own resources, so a query against one
+    * takes the full fan-out; only self-federation pays this cap.
+    *
+    * Callers cap reads and writes at `min(4, max(1, slots))` and the
+    * scatter's gather legs at `min(2, max(1, slots / 2))`. Below 2
+    * slots (a session narrower than `local[4]`) two concurrent clients
+    * would already hold every slot, so the scatter falls back to
+    * sequential per-shard COPYs and per-leg materialised reads;
+    * `local[1]` cannot self-federate at all, as the one slot cannot
+    * be both client and server.
+    */
+  def selfServeSlots(s: SparkSession): Int = s.sparkContext.defaultParallelism / 2
+
   /** One pgwire server + shared-catalog registration per fixture dir
     * (ephemeral port; the registered name is dir-keyed so several
     * fixtures can coexist in one session). Fixture setup, not query
@@ -136,15 +164,8 @@ object Federated {
     */
   def pgWireFederation(s: SparkSession, dir: String): DataFrame = {
     val (port, tbl) = pgServerFor(s, dir)
-    // SELF-federation caveat: server and client share one local[n]
-    // scheduler, so client partitions must never hold every task
-    // slot while the server needs slots to answer them (4 clients on
-    // local[4] deadlocks into read timeouts; so would 2 on local[2]).
-    // Cap the wire parallelism at HALF the scheduler width, floor 1;
-    // a production remote server has its own resources and takes the
-    // full fan-out. (local[1] cannot self-federate at all — the one
-    // slot can't be both client and server.)
-    val parts = math.min(4, math.max(1, graft.engine.Core.defaultCpus / 2))
+    // self-federation: see selfServeSlots
+    val parts = math.min(4, math.max(1, selfServeSlots(s)))
     graft.sources.PgFederation.pgTable(s, "127.0.0.1", port, tbl,
         Seq("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"),
         "c_custkey", numPartitions = parts, where = Some("c_nationkey < 13"))
@@ -167,7 +188,7 @@ object Federated {
     */
   def pgWireFederationCopy(s: SparkSession, dir: String): DataFrame = {
     val (port, tbl) = pgServerFor(s, dir)
-    val parts = math.min(4, math.max(1, graft.engine.Core.defaultCpus / 2))
+    val parts = math.min(4, math.max(1, selfServeSlots(s)))
     graft.sources.PgFederation.pgTable(s, "127.0.0.1", port, tbl,
         Seq("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"),
         "c_custkey", numPartitions = parts, where = Some("c_nationkey < 13"),
@@ -217,9 +238,8 @@ object Federated {
     val src = t(s, dir, "customer")
       .filter(col("c_nationkey") < 13)
       .select("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
-    // same self-federation slot cap as the read queries: writer tasks
-    // block on the server's commit, which needs scheduler slots
-    val parts = math.min(4, math.max(1, graft.engine.Core.defaultCpus / 2))
+    // writers block on the server's commit job: see selfServeSlots
+    val parts = math.min(4, math.max(1, selfServeSlots(s)))
     graft.sources.PgFederation.writeTable(src, "127.0.0.1", port, tbl, parts)
     graft.sources.PgFederation.pgTable(s, "127.0.0.1", port, tbl,
         Seq("c_custkey", "c_nationkey", "c_acctbal", "c_mktsegment"),
@@ -284,15 +304,11 @@ object Federated {
     val src = t(s, dir, "customer")
       .filter(col("c_nationkey") < 13)
       .select("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
-    // 2 writer partitions (one per shard) makes the routing exact
-    // (partition k → shard k) and honors the self-federation slot cap
-    // at the driver's widths (4/32). BELOW that floor two concurrent
-    // writers would hold every scheduler slot while the server's
-    // commit needs one — deadlock-to-timeout — so the scatter
-    // degrades to sequential per-shard COPYs of a hash split (a
-    // production remote has its own slots and always takes the
-    // parallel path).
-    if (graft.engine.Core.defaultCpus >= 4)
+    // 2 writer partitions (one per shard) make the routing exact
+    // (partition k → shard k); below 2 slots, sequential per-shard
+    // COPYs of a hash split (see selfServeSlots)
+    val slots = selfServeSlots(s)
+    if (slots >= 2)
       graft.sources.PgFederation.writeShards(src, shards, numPartitions = 2)
     else shards.zipWithIndex.foreach { case (shard, i) =>
       graft.sources.PgFederation.writeTable(
@@ -304,19 +320,17 @@ object Federated {
       require(s.table(shard.table).limit(1).count() == 1L,
         s"scatter left shard ${shard.table} empty — routing collapsed")
     }
-    val parts = math.min(2, math.max(1, graft.engine.Core.defaultCpus / 4))
+    val parts = math.min(2, math.max(1, slots / 2))
     val legs = shards.map { shard =>
       graft.sources.PgFederation.pgTable(s, shard.host, shard.port, shard.table,
         Seq("c_custkey", "c_nationkey", "c_acctbal", "c_mktsegment"),
         "c_custkey", numPartitions = parts)
     }
-    // the gather has the same self-federation floor as the scatter: a
-    // union over both wire legs schedules BOTH legs' client tasks at
-    // once, and below 4 slots they starve the servers' own scan jobs —
-    // materialize each leg in its own job first (one client task +
-    // one server scan fit in 2 slots), then union the local copies
+    // the union schedules both legs' client tasks at once; below 2
+    // slots, materialise each leg in its own job first (see
+    // selfServeSlots)
     val gathered =
-      if (graft.engine.Core.defaultCpus >= 4) legs
+      if (slots >= 2) legs
       else legs.zipWithIndex.map { case (l, i) =>
         graft.engine.Scratch.checkpoint(l, s"pg-scatter-leg$i") }
     graft.engine.Federation.unionShards(gathered)

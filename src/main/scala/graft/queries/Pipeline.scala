@@ -1223,19 +1223,8 @@ object Pipeline {
     * no code change.
     */
   private[queries] def startWithStateConfs[T](s: SparkSession, parts: Int)(start: => T): T = {
-    // A/B override for the replay ladders' state width (results are
-    // partition-count-invariant; see Replay's scaladoc) — lets a bench
-    // sweep measure the fixed per-batch store-commit cost at any width
-    // without a code edit
-    val effParts = sys.env.get("SPARK_GRAFT_STATE_PARTS").map(_.toInt).getOrElse(parts)
     val keys = Seq(
-      "spark.sql.shuffle.partitions" -> effParts.toString) ++
-      // same A/B posture for the store implementation (default
-      // HDFSBackedStateStoreProvider; RocksDB trades JVM heap for
-      // native memtables — measured slower on fixture-sized state,
-      // see PERF.md round-19 entry)
-      sys.env.get("SPARK_GRAFT_STATE_PROVIDER").map(p =>
-        "spark.sql.streaming.stateStore.providerClass" -> p).toSeq ++ Seq(
+      "spark.sql.shuffle.partitions" -> parts.toString,
       "spark.sql.streaming.noDataMicroBatches.enabled" -> "false",
       // offsets/commits WAL + state checkpoints on tmpfs when the
       // host has one: the replay's per-batch cost is dominated by

@@ -126,8 +126,8 @@ object PgFederation {
     * At scale this is the right write fan-out: no driver staging, no
     * shuffle — each executor ships its own rows down its own socket,
     * and `numPartitions` sizes wire parallelism exactly like the read
-    * side (self-federation against the in-repo server must cap it at
-    * half the scheduler width for the same slot-deadlock reason).
+    * side (against the in-repo server, see
+    * [[graft.queries.Federated.selfServeSlots]]).
     *
     * Delivery contract: APPEND, at-most-once per partition — a
     * retried or speculative task attempt fails loudly rather than

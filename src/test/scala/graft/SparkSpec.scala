@@ -12,16 +12,12 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
+  /** The production session builder at a fixed `local[4]`, whatever
+    * `SPARK_GRAFT_CPUS` holds — every parallelism decision in the
+    * code under test reads this session, not the environment.
+    */
   lazy val session: SparkSession = {
-    val s = SparkSession
-      .builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.maxFields", "256")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = graft.engine.Core.session("graft-test", 4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -151,4 +151,35 @@ class FederationSpec extends SparkSpec {
     // rows (id = 0, 99) survive exactly once
     assert(u.filter(col("ID").isin(0L, 99L)).count() === 2)
   }
+
+  test("selfServeSlots is half the session's scheduler width, whatever SPARK_GRAFT_CPUS holds") {
+    // the shared session is a fixed local[4]; the environment variable
+    // may say 32 (or be unset) and must not move the budget
+    assert(spark.sparkContext.defaultParallelism === 4)
+    assert(graft.queries.Federated.selfServeSlots(spark) ===
+      spark.sparkContext.defaultParallelism / 2)
+  }
+
+  // Each self-federated wire query in the shared local[4] session: a
+  // client fan-out that starves the in-process server's jobs blocks
+  // until PgClient's 120 s read timeout, so the bound sits well below
+  // it. The result must equal the same aggregate over the source.
+  Seq("q_pg_federation", "q_pg_federation_copy", "q_pg_federation_roundtrip",
+      "q_pg_federation_scatter").foreach { q =>
+    test(s"graded $q at sf0.001 finishes well inside PgClient's read timeout") {
+      val boundSec = 60.0
+      val t0 = System.nanoTime()
+      val got = graft.queries.Federated.all(q)(spark, Sf).collect().toSeq
+      val sec = (System.nanoTime() - t0) / 1e9
+      assert(sec < boundSec, f"$q took $sec%.1f s (bound $boundSec%.0f s)")
+      val expected = spark.read.parquet(s"$Sf/customer.parquet")
+        .filter(col("c_nationkey") < 13)
+        .groupBy(col("c_mktsegment"))
+        .agg(count(lit(1)).as("n"), sum(col("c_custkey")).as("key_sum"),
+          graft.queries.Num.dsum(col("c_acctbal")).as("acct_bal"))
+        .orderBy(col("c_mktsegment"))
+      assert(got.nonEmpty)
+      assert(got === expected.collect().toSeq)
+    }
+  }
 }

@@ -282,12 +282,13 @@ class PgClientSpec extends SparkSpec {
     try {
       val src = spark.read.parquet(s"$Sf/nation.parquet")
         .selectExpr("n_nationkey", "n_name", "n_regionkey")
-      // 2 partitions = 2 concurrent connections = 2 COPY commits into
-      // ONE table — exercises the per-table commit lock while honoring
-      // the self-federation slot cap (writers ≤ half the scheduler
-      // width, so the server's serialized insertInto jobs always have
-      // slots; 3 writers on local[4] would leave it exactly one)
-      val n = PgFederation.writeTable(src, "127.0.0.1", server.boundPort, "pgc_wt", 2)
+      // 2 partitions (the local[4] budget) = 2 concurrent connections
+      // = 2 COPY commits into ONE table — exercises the per-table
+      // commit lock within the self-federation slot budget, see
+      // graft.queries.Federated.selfServeSlots
+      val writers = graft.queries.Federated.selfServeSlots(spark)
+      assert(writers === 2)
+      val n = PgFederation.writeTable(src, "127.0.0.1", server.boundPort, "pgc_wt", writers)
       assert(n === src.count())
       val back = spark.table("pgc_wt").orderBy("n_nationkey").collect().map(_.toSeq).toSeq
       val want = src.orderBy("n_nationkey").collect().map(_.toSeq).toSeq
